@@ -19,21 +19,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bound the per-job SQLExecutionStart plan description: deep
-      // checkpoint/cache chains over AQE subtrees can otherwise render
-      // multi-GB plan strings (the r17 chunk-replay OOM) — 8 MB keeps
-      // any diagnostic value while capping render cost
-      .config("spark.sql.maxPlanStringLength", (8 << 20).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local("graft-bench", cpus)
 
     // 4 timed runs per query (2 suite passes × 2 reps — see phase 2):
     // host timing noise on single runs measured at ±20% with occasional
@@ -71,7 +58,7 @@ object Bench {
     // default): independent artifact builds overlap, and the many small
     // queries fill the scheduling gaps a serial pass leaves on a 32-core
     // executor. Safe because every shared build site already serializes
-    // itself (ArtifactCache's per-key future, bucketedTable's
+    // itself (ArtifactCache's Memo.once, bucketedTable's
     // synchronized block), so a racing pair of consumers computes each
     // artifact once. Steady-state timing stays strictly serial below —
     // only the untimed pay-once phase parallelizes.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: batched-BPE training probed at REAL vocabulary scale —
   * the k≫batch regime (scans=32 ⇒ ≈2k merges at batch 64) on a scaled
   * corpus, reporting the per-scan curve the PERF.md entry needs:
@@ -32,13 +30,8 @@ object BpeProbe {
     val scans = if (args.length > 1) args(1).toInt else 32
     val batch = if (args.length > 2) args(2).toInt else 64
     val window = if (args.length > 3) args(3).toInt else 32768
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bpe-probe",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val t0 = System.nanoTime()
     val perScan = scala.collection.mutable.ListBuffer
       .empty[(Int, Int, Int, Double)]

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: per-JOB timing breakdown of one registered query — the
   * stage-level view graft.Bench's one-number-per-query output hides.
@@ -16,16 +15,8 @@ object Probe {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-probe",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val jobs = java.util.Collections.synchronizedList(

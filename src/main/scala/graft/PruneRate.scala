@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print [[graft.operators.Dedup.embeddingBlockPruningReport]]
   * for a data directory — the measured block-pair pruning rate of the
   * exact embedding threshold join (PERF.md records it per scale).
@@ -13,14 +11,8 @@ object PruneRate {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val threshold = if (args.length > 1) args(1).toDouble else 0.35
     val numBlocks = if (args.length > 2) args(2).toInt else 8
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-prune-rate")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-prune-rate",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val r = graft.operators.Dedup
       .embeddingBlockPruningReport(spark, dir, threshold, numBlocks).head()
     println(s"[prune-rate] dir=$dir theta=$threshold blocks=${r.getInt(0)} " +

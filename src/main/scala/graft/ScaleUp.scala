@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -78,13 +78,8 @@ object ScaleUp {
       case _ => sys.error("usage: ScaleUp <srcSfDir> <outDir> <factor> [skew|longdoc]")
     }
     val skewMode = mode == "skew"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-scale-up",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     def guardUniverse(df: DataFrame, keyCols: Seq[String]): Unit = {
       // universes must not overlap: a source key >= KeyOffset would

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the chunk-scrub plans raced on their TARGET workload — a
@@ -30,15 +30,8 @@ object ScrubProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 1000000L
     val alsoOld = if (args.length > 1) args(1).toBoolean else true
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scrub-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-scrub-probe",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     try {
       val header = (0 until 32).map(i => s"lic$i").mkString(" ")
       // header chunk shared by ALL docs; tail chunk unique per doc

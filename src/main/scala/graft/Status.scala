@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.Tables
 
 /** Status console — the Spark-native analog of the reference master's
@@ -15,12 +14,7 @@ import graft.sources.Tables
 object Status {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-status", 4)
 
     println(s"== graft engine status ==")
     println(s"spark ${spark.version}, master ${spark.sparkContext.master}, " +

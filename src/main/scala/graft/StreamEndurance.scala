@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -65,17 +64,13 @@ object StreamEndurance {
     val lastClickMode = args.contains("lastclick")
     val docDedupMode = args.contains("docdedup")
     val chunkDedupMode = args.contains("chunkdedup")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the point of the scaled run: recovery under the provider a
-      // cluster runs for big state, not the in-heap default
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-stream-endurance",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    // the point of the scaled run: recovery under the provider a
+    // cluster runs for big state, not the in-heap default
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     if (docDedupMode) {

@@ -95,7 +95,7 @@ object Dedup {
     out
   }
 
-  private val pairCountCache = graft.sources.Memo.newCache[String]
+  private val pairCountCache = graft.sources.Memo.newCache[String, Long]
 
   /** DP-cell budget for edit-distance verification (longdoc guard, r13):
     * the banded DP behind a thresholded levenshtein costs
@@ -108,7 +108,7 @@ object Dedup {
   private[graft] def defaultDpBudget: Long =
     sys.env.getOrElse("SPARK_GRAFT_MAX_DP_CELLS", "2000000000").toLong
 
-  private val dpCellCache = graft.sources.Memo.newCache[String]
+  private val dpCellCache = graft.sources.Memo.newCache[String, Long]
 
   /** Per-pair DP band: the sim filter `rd(1 − dist/max_len, 4) ≥ s`
     * can only pass when dist ≤ (1−s)·max_len (+0.001 margin covering
@@ -1466,28 +1466,19 @@ object Dedup {
     // see OPTIMIZATION_r17.md). Job descriptions are thread-local, so
     // concurrent submission is safe; ArtifactCache reads inside the
     // reconciles serialize themselves per key.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val batchShF = Future { shingleIndexOf(batch, n).localCheckpoint() }
-    val batchCanonF = Future { canonIndexOf(batch).localCheckpoint() }
-    val batchSh = Await.result(batchShF, Duration.Inf)
-    val batchCanon = Await.result(batchCanonF, Duration.Inf)
-    val hashedF = Future {
-      sketchRefreshCore(batchSh,
+    val Seq(batchSh, batchCanon) = Par.all(spark)(
+      () => shingleIndexOf(batch, n).localCheckpoint(),
+      () => canonIndexOf(batch).localCheckpoint())
+    val Seq(hashed, sig) = Par.all(spark)(
+      () => sketchRefreshCore(batchSh,
         priorShingleIndex(spark, sfDir, n), prior, batchCanon)
         .select(col("doc_id"), col("h"), col("w_new").as("w"))
-        .localCheckpoint()
-    }
-    val sigF = Future {
-      sketchRefreshCore(
+        .localCheckpoint(),
+      () => sketchRefreshCore(
         signaturesFromHashes(batchSh).select("doc_id", "sig"),
         priorMinhashIndex(spark, sfDir, n).select("doc_id", "sig"),
         prior, batchCanon)
-        .select("doc_id", "sig").localCheckpoint()
-    }
-    val hashed = Await.result(hashedF, Duration.Inf)
-    val sig = Await.result(sigF, Duration.Inf)
+        .select("doc_id", "sig").localCheckpoint())
     val (members, _) = exactGroups(docs)
     minhashLshFrom(members, hashed, sig, threshold, maxShingleFreq)
   }

@@ -265,7 +265,7 @@ object Events {
   // per-key future (graft.sources.Memo): the occupancy aggregate runs
   // outside any map bin lock (the computeIfAbsent hazard — ADVICE r12)
   private val candidateEstimateCache =
-    graft.sources.Memo.newCache[(String, Int)]
+    graft.sources.Memo.newCache[(String, Int), Long]
 
   /** Unpivot (wide → long): per-returnflag metric columns melted into
     * (returnflag, metric, value) rows — the inverse of pivot. */

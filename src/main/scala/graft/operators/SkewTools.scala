@@ -51,26 +51,6 @@ import org.apache.spark.sql.functions._
   */
 object SkewTools {
 
-  /** Conditional scan-parallelism FLOOR (guide §2.5 "input skew" / §6
-    * `minPartitionNum`): when a frame's planned parallelism is below
-    * the session default — the single-row-group / unsplittable-file
-    * shape, where everything FUSED into the scan stage (tokenize,
-    * explode, partial aggregation, string rewrites, signature hashing)
-    * serializes onto one core — redistribute ONCE by a deterministic
-    * content key before the heavy per-row work. At scale the scan
-    * already plans ≥ default-parallelism splits and this is the
-    * IDENTITY (no exchange added), so the floor is data-adaptive, not
-    * a local-mode constant. Hash-partitioning on a real key keeps the
-    * row→partition mapping deterministic under task retries (the
-    * SPARK-38388 hazard of rand()-derived keys) and skips round-robin
-    * repartition's sort-before-repartition pass; callers pass a
-    * high-cardinality key (≥20× partitions — guide §2.5). Results are
-    * partitioning-independent by construction (aggregations / row-local
-    * maps / final total orders), so this never changes what a query
-    * computes. */
-  def parallelismFloor(df: DataFrame, keys: Column*): DataFrame =
-    graft.sources.Tables.parallelismFloor(df, keys: _*)
-
   /** Deterministic per-row salt (content-hashed, stable across runs —
     * keeps query results reproducible, unlike rand()). */
   def salt(buckets: Int, cols: Column*): Column =
@@ -175,17 +155,13 @@ object SkewTools {
     // The two anchors stay SEPARATE jobs (the Expand hazard documented
     // above) but run CONCURRENTLY (r17, guide §2.6) — they are
     // independent scalar reductions over the same pruned column.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val anchorF = Future { keys.agg(
-      count_min_sketch(col(keyCol), lit(eps), lit(confidence), lit(seed)),
-      count(col(keyCol))).head() }
-    val nKeysF = Future {
-      keys.agg(count_distinct(col(keyCol))).head().getLong(0) }
-    val anchor = Await.result(anchorF, Duration.Inf)
+    val Seq(anchor, distinct) = Par.all(keys.sparkSession)(
+      () => keys.agg(
+        count_min_sketch(col(keyCol), lit(eps), lit(confidence), lit(seed)),
+        count(col(keyCol))).head(),
+      () => keys.agg(count_distinct(col(keyCol))).head())
     val total = anchor.getLong(1)
-    val nKeys = Await.result(nKeysF, Duration.Inf)
+    val nKeys = distinct.getLong(0)
     val threshold =
       if (nKeys == 0L) Long.MaxValue // empty input: nothing is hot
       else math.max(1L, math.ceil(factor * total / nKeys).toLong)

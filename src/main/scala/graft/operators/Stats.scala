@@ -54,21 +54,13 @@ object Stats {
     // full-row shuffle, and the concurrency covers the 1-task
     // small-file shape. Results identical (count_distinct per column,
     // nulls ignored — same as the merged spelling; oracle unchanged).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val wideF = Future {
+    val wideJob = () =>
       li.agg(count(lit(1)).as("n_rows"), aggExprs.toSeq: _*).head()
-    }
-    val distinctFs = fields.map { f =>
-      f.name -> Future {
-        li.select(f.name).agg(count_distinct(col(f.name))).head().getLong(0)
-      }
-    }
-    val wide = Await.result(wideF, Duration.Inf)
+    val distinctJobs = fields.toSeq.map(f => () =>
+      li.select(f.name).agg(count_distinct(col(f.name))).head())
+    val wide +: distinctRows = Par.all(spark)(wideJob +: distinctJobs: _*)
     val nRows = wide.getAs[Long]("n_rows")
-    val distincts = distinctFs.map { case (n, fut) =>
-      n -> Await.result(fut, Duration.Inf) }.toMap
+    val distincts = fields.map(_.name).zip(distinctRows.map(_.getLong(0))).toMap
     val rows = fields.toSeq.map { f =>
       def num(prefix: String): Option[Double] = f.dataType match {
         case _: NumericType =>
@@ -153,34 +145,30 @@ object Stats {
     // §2.6) instead of running four serial driver waits; measured 2.0 s
     // of serial construction at sf0.1, dominated by the lineitem
     // composite-key distinct
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val oF = Future { orders.agg(
-      count(lit(1)), count_distinct(col("o_orderkey")),
-      viol(col("o_orderdate").isNull)).head() }
-    val lF = Future { li.agg(
-      count(lit(1)),
-      count_distinct(struct(col("l_orderkey"), col("l_linenumber"))),
-      viol(col("l_quantity") < 1 || col("l_quantity") > 50),
-      viol(!col("l_returnflag").isin("A", "N", "R")),
-      viol(col("l_extendedprice") < 0)).head() }
-    // referential integrity: orphan keys via anti join (key column only)
-    val liOrphansF = Future { li.select("l_orderkey")
-      .join(orders.select("o_orderkey"),
-        col("l_orderkey") === col("o_orderkey"), "left_anti").count() }
-    val oOrphansF = Future { orders.select("o_custkey")
-      .join(cust.select("c_custkey"),
-        col("o_custkey") === col("c_custkey"), "left_anti").count() }
-    val o = Await.result(oF, Duration.Inf)
-    val l = Await.result(lF, Duration.Inf)
-    val liOrphans = Await.result(liOrphansF, Duration.Inf)
-    val oOrphans = Await.result(oOrphansF, Duration.Inf)
+    val Seq(o, l, liOrphans, oOrphans) = Par.all(spark)(
+      () => orders.agg(
+        count(lit(1)), count_distinct(col("o_orderkey")),
+        viol(col("o_orderdate").isNull)).head(),
+      () => li.agg(
+        count(lit(1)),
+        count_distinct(struct(col("l_orderkey"), col("l_linenumber"))),
+        viol(col("l_quantity") < 1 || col("l_quantity") > 50),
+        viol(!col("l_returnflag").isin("A", "N", "R")),
+        viol(col("l_extendedprice") < 0)).head(),
+      // referential integrity: orphan keys via anti join (key column only)
+      () => li.select("l_orderkey")
+        .join(orders.select("o_orderkey"),
+          col("l_orderkey") === col("o_orderkey"), "left_anti")
+        .agg(count(lit(1))).head(),
+      () => orders.select("o_custkey")
+        .join(cust.select("c_custkey"),
+          col("o_custkey") === col("c_custkey"), "left_anti")
+        .agg(count(lit(1))).head())
     val nO = o.getLong(0); val nL = l.getLong(0)
     Seq(
       ("enum_lineitem_returnflag", "lineitem", nL, l.getLong(3)),
-      ("fk_lineitem_orderkey", "lineitem", nL, liOrphans),
-      ("fk_orders_custkey", "orders", nO, oOrphans),
+      ("fk_lineitem_orderkey", "lineitem", nL, liOrphans.getLong(0)),
+      ("fk_orders_custkey", "orders", nO, oOrphans.getLong(0)),
       ("nn_orders_orderdate", "orders", nO, o.getLong(2)),
       ("nonneg_lineitem_extendedprice", "lineitem", nL, l.getLong(4)),
       ("pk_lineitem_orderkey_linenumber", "lineitem", nL, nL - l.getLong(1)),

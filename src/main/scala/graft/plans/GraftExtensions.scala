@@ -46,8 +46,10 @@ object DotProductRewrite extends Rule[LogicalPlan] {
   * registrations of the engine's native expressions
   * (`graft_dot(a, b)`, `graft_rolling_hash(s)`).
   *
-  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)`
-  * or `--conf spark.sql.extensions=graft.plans.GraftExtensions`. */
+  * Usage: `--conf spark.sql.extensions=graft.plans.GraftExtensions` (or
+  * `-Dspark.sql.extensions=...` on a JVM whose session comes from
+  * [[graft.Sessions.local]]), or [[GraftExtensions.registerRuntime]] on
+  * a session already built. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => DotProductRewrite)

@@ -17,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    is reused even by a different JVM.
   *  - [[readOrWrite]]: session cache. Deterministic location under the
   *    JVM temp dir keyed by (artifact name, params, corpus fingerprint);
-  *    at most one writer per key per JVM (per-key future, so the Spark
+  *    at most one writer per key per JVM ([[Memo.once]], so the Spark
   *    job runs outside any map bin lock and a failed write retries);
   *    stale fingerprints of the same key are deleted; a second session
   *    over an unchanged corpus reuses the on-disk artifact via the
@@ -62,8 +62,7 @@ object ArtifactCache {
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** (artifact key, fingerprint) → the one in-flight/completed write. */
-  private val inFlight =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[String]]()
+  private val written = Memo.newCache[String, String]
 
   /** Session-cached artifact: materialize `df` at a deterministic
     * location keyed by (`name`, `params`, fingerprint of `tablePath`),
@@ -157,9 +156,10 @@ object ArtifactCache {
   /** The shared keyed-location + single-writer mechanics of the two
     * readOrWrite formats: resolve the (name, params, fingerprint)
     * location, reclaim stale fingerprints of the same key, and run
-    * `write` at most once per JVM (per-key future; a failed write
-    * clears the slot so a retry recomputes). Returns the artifact
-    * path once the write — this thread's or a racer's — completes. */
+    * `write` at most once per JVM ([[Memo.once]]: a failed write
+    * clears the slot so a retry recomputes, and a racer gets the
+    * write's own exception). Returns the artifact path once the
+    * write — this thread's or a racer's — completes. */
   private def computeOnce(spark: SparkSession, name: String, params: String,
       tablePath: String)(write: String => Unit): String = {
     val keyHash = md5(s"$name|$params").take(16)
@@ -167,24 +167,14 @@ object ArtifactCache {
     val base = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft-artifact-cache", s"$name-$keyHash")
     val out = base.resolve(fp).toString
-    val key = s"$name-$keyHash/$fp"
-    val fut = new java.util.concurrent.CompletableFuture[String]()
-    val prev = inFlight.putIfAbsent(key, fut)
-    if (prev == null) {
-      try {
-        // stale fingerprints of the same (name, params) are garbage
-        val dir = base.toFile
-        if (dir.isDirectory)
-          dir.listFiles().filter(_.getName != fp).foreach(deleteRecursively)
-        write(out)
-        fut.complete(out)
-      } catch { case e: Throwable =>
-        inFlight.remove(key, fut)
-        fut.completeExceptionally(e)
-        throw e
-      }
+    Memo.once(written, s"$name-$keyHash/$fp") {
+      // stale fingerprints of the same (name, params) are garbage
+      val dir = base.toFile
+      if (dir.isDirectory)
+        dir.listFiles().filter(_.getName != fp).foreach(deleteRecursively)
+      write(out)
+      out
     }
-    (if (prev == null) fut else prev).join()
   }
 
   /** Detach a result frame from its upstream resources: eagerly

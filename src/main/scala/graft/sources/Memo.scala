@@ -2,9 +2,10 @@ package graft.sources
 
 import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap}
 
-/** Once-per-JVM memo for guard statistics (pair prices, candidate
-  * counts, worst-key state products): the per-key-future discipline of
-  * [[ArtifactCache.computeOnce]], extracted for plain values.
+/** Once-per-JVM, once-per-key memo: guard statistics (pair prices,
+  * candidate counts, worst-key state products), the floor decisions of
+  * [[Tables.floored]] and the artifact writes of [[ArtifactCache]] all
+  * run their compute through [[once]].
   *
   * Why not `ConcurrentHashMap.computeIfAbsent`: the compute here is
   * typically a multi-second Spark aggregate, and `computeIfAbsent`
@@ -27,11 +28,11 @@ import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentH
 object Memo {
   /** One key's slot: the shared future plus the thread that owns the
     * in-flight compute (for the same-key re-entrancy check). */
-  final class Slot(val fut: CompletableFuture[java.lang.Long], val owner: Thread)
+  final class Slot[V](val fut: CompletableFuture[V], val owner: Thread)
 
-  type Cache[K] = ConcurrentHashMap[K, Slot]
+  type Cache[K, V] = ConcurrentHashMap[K, Slot[V]]
 
-  def newCache[K]: Cache[K] = new ConcurrentHashMap()
+  def newCache[K, V]: Cache[K, V] = new ConcurrentHashMap()
 
   /** Return the memoized value for `key`, running `compute` at most
     * once per JVM (absent failures). Blocks racers until the one
@@ -39,33 +40,33 @@ object Memo {
     * as the ORIGINAL exception (a guard's domain refusal must surface
     * as itself in the racing session too, not as the
     * `CompletionException` that `join` wraps around it — ADVICE r13). */
-  def once[K](cache: Cache[K], key: K)(compute: => Long): Long = {
-    val slot = new Slot(new CompletableFuture[java.lang.Long](), Thread.currentThread())
+  def once[K, V](cache: Cache[K, V], key: K)(compute: => V): V = {
+    val slot = new Slot(new CompletableFuture[V](), Thread.currentThread())
     val prev = cache.putIfAbsent(key, slot)
     if (prev == null) {
-      try slot.fut.complete(java.lang.Long.valueOf(compute)): Unit
+      try slot.fut.complete(compute): Unit
       catch { case e: Throwable =>
         cache.remove(key, slot): Unit
         slot.fut.completeExceptionally(e): Unit
         throw e
       }
-      slot.fut.join().longValue
+      slot.fut.join()
     } else {
       if (!prev.fut.isDone && (prev.owner eq Thread.currentThread()))
         throw new IllegalStateException(
           s"re-entrant Memo.once on in-flight key $key: the compute for " +
             "this key called Memo.once on the same key — joining its own " +
             "future would deadlock")
-      try prev.fut.join().longValue
+      try prev.fut.join()
       catch { case e: CompletionException if e.getCause != null => throw e.getCause }
     }
   }
 
   /** Non-blocking peek: the completed value for `key`, if any. */
-  def peek[K](cache: Cache[K], key: K): Option[Long] = {
+  def peek[K, V](cache: Cache[K, V], key: K): Option[V] = {
     val slot = cache.get(key)
     if (slot != null && slot.fut.isDone && !slot.fut.isCompletedExceptionally)
-      Some(slot.fut.join().longValue)
+      Some(slot.fut.join())
     else None
   }
 }

@@ -35,46 +35,21 @@ object Tables {
     "events" -> Seq("event_id"),
     "embeddings" -> Seq("vec_id"))
 
-  /** Conditional scan-parallelism FLOOR (guide §2.5 "input skew",
-    * §6 `minPartitionNum`): when a frame plans fewer partitions than
-    * the session default — the single-row-group / unsplittable-file
-    * shape, where all work FUSED into the scan stage (tokenize,
-    * explode, partial aggregation, string rewrites, vector math)
-    * serializes onto one core — redistribute ONCE by a deterministic
-    * content key. At scale the scan already plans ≥ default-parallelism
-    * splits and this is the IDENTITY (no exchange added), so the floor
-    * is data-adaptive, not a local-mode constant. Hash partitioning on
-    * a real key keeps row→partition deterministic under task retries
-    * (the SPARK-38388 hazard of rand()/round-robin keys); filters and
-    * column pruning still push below the repartition to the scan.
-    * Results are partitioning-independent by construction (every
-    * registered query ends in a total order; aggregates are
-    * partition-commutative), so the floor never changes what a query
-    * computes. */
-  def parallelismFloor(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= want) df
-    else df.repartition(want, keys: _*)
-  }
-
   /** Floor decision memo (None = scan already wide enough, leave it).
     * `df.rdd.getNumPartitions` forces a physical plan (file listing
     * included) per probe; the answer depends only on the file layout
     * and the session parallelism, so pay it once per (dir, table,
-    * parallelism), not once per query construction (ADVICE r16). */
-  private val floorMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Int]]()
+    * parallelism, file fingerprint), not once per query construction
+    * (ADVICE r16). The fingerprint makes a table rewritten in place
+    * decide again; [[Memo.once]] runs the probe outside any map lock. */
+  private val floorMemo = Memo.newCache[String, Option[Int]]
 
-  /** Total on-disk bytes of one table's parquet (file or directory). */
-  private def tableBytes(sfDir: String, name: String): Long = {
-    val p = java.nio.file.Paths.get(s"$sfDir/$name.parquet")
-    if (!java.nio.file.Files.exists(p)) 0L
-    else {
-      val st = java.nio.file.Files.walk(p)
-      try st.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally st.close()
-    }
+  /** Total on-disk bytes of one table's parquet (file or directory),
+    * through the Hadoop FileSystem so non-local stores measure too. */
+  private def tableBytes(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength
   }
 
   /** Opt-in floored fact-table read for HEAVY per-row consumers (BPE
@@ -87,14 +62,18 @@ object Tables {
     * So the floor now lives AT those call sites — the default read
     * stays the raw scan and each heavy consumer asks for the floored
     * shape explicitly (r17; guide §1.2 step 1 "choose a partitioning",
-    * §2.5). Same deterministic keys, same identity-at-scale argument
-    * as [[parallelismFloor]]. */
+    * §2.5). The repartition hashes a content key ([[floorKeys]]), so
+    * row→partition is fixed under task retries (the SPARK-38388 hazard
+    * of rand() keys); results never depend on it, since every
+    * registered query ends in a total order. */
   def floored(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = load(spark, sfDir, name)
     val keys = floorKeys.getOrElse(name,
       sys.error(s"no floor key declared for table $name"))
     val want = spark.sparkContext.defaultParallelism
-    val target = floorMemo.computeIfAbsent(s"$sfDir/$name@$want", _ => {
+    val path = s"$sfDir/$name.parquet"
+    val fp = ArtifactCache.fingerprint(spark, path)
+    val target = Memo.once(floorMemo, s"$path@$want#$fp") {
       // SIZE-ADAPTIVE target, not a blind jump to defaultParallelism
       // (guide §2.2 "fewer, larger partitions"): one partition per
       // ~2 MB of compressed source, clamped to [2, want]. A 32-way
@@ -105,9 +84,9 @@ object Tables {
       // planning enough splits on its own, so the cap (and the probe)
       // keep the floor the identity there.
       val parts = math.max(2L, math.min(want.toLong,
-        tableBytes(sfDir, name) / (2L << 20))).toInt
+        tableBytes(spark, path) / (2L << 20))).toInt
       if (df.rdd.getNumPartitions >= parts) None else Some(parts)
-    })
+    }
     target.fold(df)(n =>
       df.repartition(n, keys.map(org.apache.spark.sql.functions.col): _*))
   }

@@ -482,9 +482,9 @@ object EventStream {
   // outside any map bin lock — computeIfAbsent would hold it for the
   // Spark job's duration and serialize unrelated keys in the same bin
   private val attributionEstimateCache =
-    graft.sources.Memo.newCache[(String, Int)]
+    graft.sources.Memo.newCache[(String, Int), Long]
   private val attributionStateProductCache =
-    graft.sources.Memo.newCache[String]
+    graft.sources.Memo.newCache[String, Long]
 
   /** Worst-key state-scan price, memoized per corpus fingerprint — see
     * [[clickPurchaseStateProductOf]]. */

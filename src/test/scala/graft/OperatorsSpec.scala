@@ -34,7 +34,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("Memo.once: one compute per key, shared by racers, retry after failure, re-entrant-safe") {
     import graft.sources.Memo
-    val cache = Memo.newCache[String]
+    val cache = Memo.newCache[String, Long]
     val computes = new java.util.concurrent.atomic.AtomicInteger(0)
     // 8 racers on one key: exactly one compute runs, all see its value
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
@@ -73,10 +73,101 @@ class OperatorsSpec extends SparkSpec {
     // Pre-install the failed slot another thread would have left the
     // racer joining on — deterministic, no sleep-window flake.
     final class DomainBoom extends RuntimeException("domain refusal")
-    val failedFut = new java.util.concurrent.CompletableFuture[java.lang.Long]()
+    val failedFut = new java.util.concurrent.CompletableFuture[Long]()
     failedFut.completeExceptionally(new DomainBoom)
     cache.put("dboom", new Memo.Slot(failedFut, new Thread()))
     intercept[DomainBoom] { Memo.once(cache, "dboom")(0L) }: Unit
+  }
+
+  test("readOrWrite: two threads racing a failing write both get the original exception") {
+    import graft.sources.ArtifactCache
+    val dir = java.nio.file.Files.createTempDirectory("graft-failart-").toString
+    final class WriteBoom extends RuntimeException("write refused")
+    val forced = new java.util.concurrent.atomic.AtomicInteger(0)
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    @volatile var racer: Thread = null
+    // the write holds until the racer is parked on this key's slot, so
+    // the racer waits on the failing write instead of running its own
+    def failing: org.apache.spark.sql.DataFrame = {
+      forced.incrementAndGet()
+      entered.countDown()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def parked = racer != null &&
+        racer.getState == Thread.State.WAITING &&
+        racer.getStackTrace.exists(_.getClassName.contains("CompletableFuture"))
+      while (!parked && System.nanoTime() < deadline) Thread.sleep(10)
+      throw new WriteBoom
+    }
+    def read() = ArtifactCache.readOrWrite(spark, "spec-fail", dir,
+      s"$dir/t.parquet")(failing)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      Seq((1L, "x")).toDF("id", "v").write.parquet(s"$dir/t.parquet")
+      type Read = java.util.concurrent.Callable[org.apache.spark.sql.DataFrame]
+      val first = pool.submit[org.apache.spark.sql.DataFrame](
+        (() => read()): Read)
+      entered.await()
+      val second = pool.submit[org.apache.spark.sql.DataFrame](
+        (() => { racer = Thread.currentThread(); read() }): Read)
+      Seq(first, second).foreach { f =>
+        val e = intercept[java.util.concurrent.ExecutionException](f.get())
+        assert(e.getCause.isInstanceOf[WriteBoom], e.getCause)
+      }
+      assert(forced.get() === 1, "the racer shared the one failing write")
+    } finally {
+      pool.shutdown()
+      ArtifactCache.deleteRecursively(new java.io.File(dir))
+    }
+  }
+
+  /** Floor target `Tables.floored` chose for `documents` under `dir`
+    * (None = no repartition), with the scan packed into one partition
+    * so the size rule, not the split count, decides. */
+  private def floorTarget(dir: String): Option[Int] = {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    val key = "spark.sql.files.minPartitionNum"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try graft.sources.Tables.floored(spark, dir, "documents")
+      .queryExecution.logical.collectFirst {
+        case r: RepartitionByExpression => r.optNumPartitions.get
+      }
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `files` parquet files of ~`mbPerFile` MB each (incompressible). */
+  private def writeDocs(dir: String, files: Int, mbPerFile: Double): Unit = {
+    val rows = (mbPerFile * (1 << 20) / 72).toLong * files
+    spark.range(0, rows, 1, files).select(col("id").as("doc_id"),
+        unhex(sha2(col("id").cast("string"), 512)).as("blob"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+
+  private def parquetBytes(dir: String): Long =
+    new java.io.File(s"$dir/documents.parquet").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+
+  test("Tables.floored sizes its target from every file of the table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-floor-").toString
+    try {
+      writeDocs(dir, files = 3, mbPerFile = 2.3)
+      val bytes = parquetBytes(dir)
+      val want = spark.sparkContext.defaultParallelism
+      val expected = math.max(2L, math.min(want.toLong, bytes / (2L << 20))).toInt
+      assert(expected >= 3, s"fixture must size past any single file ($bytes bytes)")
+      assert(floorTarget(dir) === Some(expected))
+    } finally graft.sources.ArtifactCache.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("Tables.floored decides again after the table is rewritten in place") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-refloor-").toString
+    try {
+      writeDocs(dir, files = 1, mbPerFile = 0.05)
+      assert(floorTarget(dir) === Some(2))
+      writeDocs(dir, files = 3, mbPerFile = 2.3)
+      assert(floorTarget(dir).exists(_ >= 3),
+        "the floor memo must not serve the old layout's decision")
+    } finally graft.sources.ArtifactCache.deleteRecursively(new java.io.File(dir))
   }
 
   test("readBack relabel fires only on path-gone failures (ADVICE r12)") {
